@@ -521,14 +521,7 @@ def split_no_leakage(
     converges in 10 of the default 20."""
     from .dedup import neardup_components
 
-    stats: dict = {}
-    comp = neardup_components(docs, text_col, stats=stats)
-    if not stats.get("converged", False):
-        raise RuntimeError(
-            "split_no_leakage: component labels did not converge in "
-            f"{stats.get('rounds')} rounds — raise max_iter rather "
-            "than risk splitting a near-dup cluster across splits"
-        )
+    comp = neardup_components(docs, text_col)
     gid = F.coalesce(F.col("component_id"), F.col("doc_id"))
     return (
         docs.select("doc_id")

@@ -14,10 +14,12 @@ falls back to SortAggregate, adding a full sort of the shingle
 relation), and reproducible in DuckDB via digit arithmetic.
 
 Scale posture: every step is a hash aggregate or an equi-join on a
-bucket key. The LSH bucket join carries a bucket-size guard
-(2..MAX_BUCKET) — a mega-bucket (degenerate shingle) is a quadratic
-skew bomb at 100 TB; dropping it is both the standard practice and a
-documented semantic choice mirrored in the oracle.
+bucket key. Every within-relation candidate generator (here, in
+imagehash, linkage and simsearch) pairs through bucket_self_join,
+whose 2..max_bucket size guard drops mega-buckets (degenerate
+shingles) — a quadratic skew bomb at 100 TB; dropping them is both
+the standard practice and a documented semantic choice mirrored in
+the oracle.
 """
 
 from __future__ import annotations
@@ -141,23 +143,6 @@ def minhash_signatures(sh: DataFrame, k: int = NUM_HASHES) -> DataFrame:
     return withb.groupBy("doc_id").agg(*aggs)
 
 
-def lsh_bands(sig: DataFrame, bands: int = NUM_BANDS, k: int = NUM_HASHES) -> DataFrame:
-    """(doc_id, band, key): concat each band's hash rows into a bucket key."""
-    rows = k // bands
-    entries = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "_", *[F.col(f"h{b * rows + r}") for r in range(rows)]
-            ).alias("key"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*entries)).alias("e")
-    ).select("doc_id", "e.band", "e.key")
-
-
 def lsh_band_keys(
     sh: DataFrame, k: int = NUM_HASHES, bands: int = NUM_BANDS
 ) -> DataFrame:
@@ -166,13 +151,13 @@ def lsh_band_keys(
     that band's min-aggs) instead of materializing k hash columns and
     banding them in a second projection.
 
-    Semantically identical to lsh_bands(minhash_signatures(sh, k)) —
-    same mins, same BUCKETS — but the relation is `bands` columns wide
-    instead of k, which matters for plan overhead at k in the hundreds:
-    analysis/codegen over a 128-column signature relation costs whole
-    seconds per query at k=128 (measured 3.7s -> 0.6s at sf0.01); the
-    agg buffer is still k fixed-width longs, so it stays map-side
-    combinable HashAggregate either way.
+    Same mins and same BUCKETS as banding minhash_signatures(sh, k),
+    but the relation is `bands` columns wide instead of k, which
+    matters for plan overhead at k in the hundreds: analysis/codegen
+    over a 128-column signature relation costs whole seconds per query
+    at k=128 (measured 3.7s -> 0.6s at sf0.01); the agg buffer is
+    still k fixed-width longs, so it stays map-side combinable
+    HashAggregate either way.
 
     The bucket key is an array<long> packing each PAIR of 31-bit
     min-hashes into one signed long (h_even * 2^31 + h_odd < 2^62 —
@@ -350,51 +335,61 @@ def minhash_candidate_pairs(
     (r=8, threshold ~0.7) — both operating points are pinned by the
     planted precision/recall test in tests/test_extensions.py.
 
-    The size guard is a window count over (band, key), not a
-    groupBy+join back: one exchange on the bucket key that the
-    subsequent self-join reuses (ReuseExchange), so the expensive
-    shingle->signature lineage is shuffled exactly once instead of
-    recomputed per consumer.
-    """
+    Pairing is band_candidate_pairs over bucket_self_join."""
     bands_df = lsh_band_keys(shingles(docs, text_col), k, bands)
     return band_candidate_pairs(bands_df)
 
 
+def bucket_self_join(
+    df: DataFrame, keys: list[str], id_col: str, max_bucket: int = MAX_BUCKET
+) -> DataFrame:
+    """The one guarded bucket self-join behind every within-relation
+    candidate-pair generator: rows of `df` that share all `keys`, as
+    unordered pairs. Returns the keys plus every other column twice,
+    as <col>_a and <col>_b, filtered to <id_col>_a < <id_col>_b.
+
+    Buckets outside 2..max_bucket rows are dropped first: a one-row
+    bucket forms no pair, and a bucket over the cap (a stop shingle,
+    a solid-color band, a null-heavy block key) would make its task
+    quadratic — a documented recall trade, mirrored in the oracles.
+    The guard is a window count over `keys`, not a groupBy+join back:
+    one exchange on the bucket key. hint("merge") pins the self-join
+    to sort-merge so both identical-plan sides reuse that exchange
+    (and its sort order) at runtime; left to the planner, a small
+    side auto-broadcasts and the BroadcastExchange recomputes the
+    whole upstream lineage, since it cannot reuse a shuffle exchange.
+    At data scale a broadcast is ineligible anyway, so sort-merge is
+    also the 100 TB plan. Empty `keys` raise: one global bucket would
+    make the join all-pairs."""
+    if not keys:
+        raise ValueError(
+            "bucket_self_join needs >= 1 key: an empty key would make "
+            "the candidate join all-pairs"
+        )
+    guarded = (
+        df.withColumn("__sz", F.count("*").over(Window.partitionBy(*keys)))
+        .filter((F.col("__sz") >= 2) & (F.col("__sz") <= F.lit(int(max_bucket))))
+        .drop("__sz")
+    )
+    rest = [c for c in guarded.columns if c not in keys]
+
+    def side(sfx: str) -> DataFrame:
+        return guarded.select(*keys, *[F.col(c).alias(f"{c}{sfx}") for c in rest])
+
+    return (
+        side("_a")
+        .join(side("_b").hint("merge"), keys)
+        .filter(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
+    )
+
+
 def band_candidate_pairs(bands_df: DataFrame) -> DataFrame:
     """(doc_a, doc_b, n_bands) from any (doc_id, band, key) band
-    relation — the guarded bucket self-join shared by the classic
-    MinHash generator above and the OPH generator below. The size
-    guard is a window count over (band, key), not a groupBy+join
-    back: one exchange on the bucket key that the subsequent
-    self-join reuses (ReuseExchange), so the expensive signature
-    lineage is shuffled exactly once instead of recomputed per
-    consumer."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "key")
-    guarded = (
-        bands_df.withColumn("sz", F.count("*").over(w))
-        .filter((F.col("sz") >= 2) & (F.col("sz") <= MAX_BUCKET))
-        .drop("sz")
-    )
-    a = guarded.select(
-        "band", "key", F.col("doc_id").alias("doc_a")
-    )
-    b = guarded.select(
-        "band", "key", F.col("doc_id").alias("doc_b")
-    )
-    # hint("merge"): the two sides are IDENTICAL plans, so the
-    # sort-merge self-join reuses ONE exchange (the guard window's,
-    # whose sort order it also inherits) via runtime ReusedExchange.
-    # Left to the planner, the build side auto-broadcasts at small
-    # sizes and the broadcast subtree RECOMPUTES the whole signature
-    # lineage (round 16 §3.1 finding — a BroadcastExchange cannot
-    # reuse a shuffle exchange); at data scale the broadcast is
-    # ineligible anyway, so SMJ is also the 100 TB plan.
+    relation — the classic MinHash and the OPH generators both pair
+    through bucket_self_join."""
     return (
-        a.join(b.hint("merge"), ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        bucket_self_join(bands_df, ["band", "key"], "doc_id")
+        .groupBy(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .agg(F.countDistinct("band").alias("n_bands"))
     )
 
@@ -741,7 +736,8 @@ def neardup_components(
     stats, when given, receives {"rounds": n, "converged": bool} —
     the scale-stress suite uses it to assert the propagation stays
     inside graph-diameter rounds on planted mega-clusters instead of
-    crawling to the max_iter cap.
+    crawling to the max_iter cap. Non-convergence raises
+    (components_over_pairs).
     """
     pairs = minhash_candidate_pairs(docs, text_col).select("doc_a", "doc_b")
     return components_over_pairs(pairs, max_iter=max_iter, stats=stats)
@@ -753,9 +749,10 @@ def components_over_pairs(
     stats: dict | None = None,
 ) -> DataFrame:
     """The label-propagation core of neardup_components over ANY
-    (doc_a, doc_b) pair relation — round 9 extracts it so the image
-    near-dup tier (operators/imagehash.py pairs) runs the identical
-    iteration; semantics and plan unchanged for the MinHash caller."""
+    (doc_a, doc_b) pair relation, shared by the image near-dup and
+    entity-resolution tiers. Raises RuntimeError when max_iter rounds
+    end with labels still changing: a truncated label is non-minimal
+    on long-chain components, which would silently split a cluster."""
     pairs = pairs.select("doc_a", "doc_b")
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
@@ -807,6 +804,12 @@ def components_over_pairs(
     if stats is not None:
         stats["rounds"] = rounds
         stats["converged"] = converged
+    if not converged:
+        raise RuntimeError(
+            f"components_over_pairs: labels did not converge within "
+            f"max_iter={max_iter} rounds — component ids would be "
+            "partly propagated (wrong). Raise max_iter."
+        )
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("component_id")
     )
@@ -1173,32 +1176,15 @@ def winnowing_pairs(
     that embeds one plagiarized paragraph in otherwise-novel text
     pairs up here and scores ~0 Jaccard there.
 
-    Same guarded self-join shape as the MinHash candidate generator:
-    fingerprint buckets above MAX_BUCKET (stop-gram territory — a
-    boilerplate fingerprint shared by everyone) are dropped by the
-    window guard BEFORE the self-join, so no task goes quadratic;
-    n_shared then thresholds the pair noise floor. The fingerprint
-    relation itself is map-side (textstats.winnowing_fingerprint:
-    zero shuffles), so the whole operator pays one (fp) exchange the
-    guard window and self-join share (ReuseExchange)."""
+    Fingerprints pair through bucket_self_join (a fingerprint over
+    MAX_BUCKET docs is a boilerplate stop-gram); n_shared then
+    thresholds the pair noise floor. The fingerprint relation itself
+    is map-side (textstats.winnowing_fingerprint: zero shuffles)."""
     from .textstats import winnowing_fingerprint
 
-    fp = winnowing_fingerprint(docs, text_col)
-    w = Window.partitionBy("fp")
-    guarded = (
-        fp.withColumn("sz", F.count("*").over(w))
-        .filter((F.col("sz") >= 2) & (F.col("sz") <= MAX_BUCKET))
-        .drop("sz")
-    )
-    a = guarded.select("fp", F.col("doc_id").alias("doc_a"))
-    b = guarded.select("fp", F.col("doc_id").alias("doc_b"))
-    # hint("merge"): identical-plan self-join — force SMJ so the
-    # guard exchange is reused instead of the build side recomputing
-    # the fingerprint lineage under a broadcast (round 16 §3.1)
     return (
-        a.join(b.hint("merge"), "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
+        bucket_self_join(winnowing_fingerprint(docs, text_col), ["fp"], "doc_id")
+        .groupBy(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
         .agg(F.count("*").cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -1283,10 +1269,8 @@ def simhash_pairs(
     bit_count verification filters the survivors. Returns
     (doc_a, doc_b, hamming), hamming <= max_dist.
 
-    Scale shape: the simhash aggregate (one map-side hash agg), a
-    bucket-size-guarded band self-join (the
-    minhash band_candidate_pairs discipline — one (band, key)
-    exchange shared by guard window and join), and a row-local
+    Scale shape: the simhash aggregate (one map-side hash agg), the
+    band buckets paired by bucket_self_join, and a row-local
     xor+bit_count verify. max_dist > bands-1 raises: the pigeonhole
     guarantee would silently break."""
     if max_dist > bands - 1:
@@ -1309,32 +1293,12 @@ def simhash_pairs(
     rel = sig.select(
         "doc_id", "simhash", F.explode(F.array(*entries)).alias("e")
     ).select("doc_id", "simhash", "e.band", "e.key")
-    w = Window.partitionBy("band", "key")
-    guarded = (
-        rel.withColumn("sz", F.count("*").over(w))
-        .filter((F.col("sz") >= 2) & (F.col("sz") <= MAX_BUCKET))
-        .drop("sz")
-    )
-    a = guarded.select(
-        "band", "key",
-        F.col("doc_id").alias("doc_a"),
-        F.col("simhash").alias("__sa"),
-    )
-    b = guarded.select(
-        "band", "key",
-        F.col("doc_id").alias("doc_b"),
-        F.col("simhash").alias("__sb"),
-    )
-    # hint("merge"): identical-plan self-join — reuse the guard
-    # exchange instead of recomputing the simhash aggregate under a
-    # broadcast build side (round 16 §3.1)
     return (
-        a.join(b.hint("merge"), ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        bucket_self_join(rel, ["band", "key"], "doc_id")
         .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb")))
+            F.col("doc_id_a").alias("doc_a"),
+            F.col("doc_id_b").alias("doc_b"),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
             .cast("int")
             .alias("hamming"),
         )

@@ -33,11 +33,11 @@ integer arithmetic with a bit-identical DuckDB twin, shared by all
 sources.
 
 Scale shape: the hash is one row-local projection over the scan (no
-shuffle, no UDF — whole-stage codegen). Candidate generation is one
-exchange on (band_idx, band_value) with a MAX_BUCKET guard capping
-any degenerate band bucket (boilerplate images — same reasoning as
-dedup.py's LSH guard), then a distinct on bounded pairs; at 100 TB
-the band join carries 4 rows per image, never the image bytes.
+shuffle, no UDF — whole-stage codegen). Candidate generation is
+dedup.bucket_self_join on (band_idx, band_val), whose MAX_BUCKET
+guard drops degenerate band buckets (boilerplate images), then a
+distinct on bounded pairs; at 100 TB the band join carries 4 rows
+per image, never the image bytes.
 """
 
 from __future__ import annotations
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import MAX_BUCKET, bucket_self_join
 from .spread import spread_for_kernel
 
 GRID_R = 8  # hash rows
@@ -53,7 +54,6 @@ GRID_C = 8  # comparison bits per row (grid has GRID_C + 1 columns)
 N_PIX = GRID_R * (GRID_C + 1)  # 72 sampled pixels
 N_BANDS = 4
 BAND_BITS = (GRID_R * GRID_C) // N_BANDS  # 16
-MAX_BUCKET = 100  # degenerate-band guard, as dedup.py MAX_BUCKET
 
 
 def pixel_pos(i: int) -> str:
@@ -189,14 +189,14 @@ def image_phash_decoded(media: DataFrame) -> DataFrame:
     return _bands_to_phash(px)
 
 
-def hamming_expr(prefix_a: str, prefix_b: str) -> F.Column:
-    """Hamming distance between two banded hashes: sum of per-band
-    popcounts of the XOR — exact integer, identical in DuckDB
-    (bit_count(xor(a, b)))."""
+def hamming_expr(suffix_a: str, suffix_b: str) -> F.Column:
+    """Hamming distance between two banded hashes b0..b3 carried as
+    b<j><suffix_a> and b<j><suffix_b>: sum of per-band popcounts of
+    the XOR — exact integer, identical in DuckDB (bit_count(xor(a, b)))."""
     d = F.lit(0)
     for j in range(N_BANDS):
         d = d + F.bit_count(
-            F.col(f"{prefix_a}b{j}").bitwiseXOR(F.col(f"{prefix_b}b{j}"))
+            F.col(f"b{j}{suffix_a}").bitwiseXOR(F.col(f"b{j}{suffix_b}"))
         )
     return d.cast("int")
 
@@ -217,12 +217,11 @@ def image_neardup_pairs(
     exploding quadratically, the same documented trade as
     dedup.py's LSH guard.
 
-    Scale shape: hashes unpivot to 4 rows each; ONE exchange on
-    (band_idx, band_value); bucket sizes are capped before the
-    self-join so the pair stage is O(sum bucket²) <= buckets *
-    max_bucket²; pair dedup is a distinct over already-bounded
-    candidates. The full hash rides along (4 BIGINTs), so no join
-    back to the hash relation is needed for the Hamming filter."""
+    Scale shape: hashes unpivot to 4 rows each and pair through
+    dedup.bucket_self_join on (band_idx, band_val); pair dedup is a
+    distinct over already-bounded candidates. The full hash rides
+    along (4 BIGINTs), so no join back to the hash relation is needed
+    for the Hamming filter."""
     bands = F.array(
         *[
             F.struct(
@@ -243,40 +242,19 @@ def image_neardup_pairs(
         F.col("bd.band_idx").alias("band_idx"),
         F.col("bd.band_val").alias("band_val"),
     )
-    sized = unp.withColumn(
-        "__sz",
-        F.count("*").over(Window.partitionBy("band_idx", "band_val")),
-    ).filter(F.col("__sz") <= F.lit(int(max_bucket)))
-    a = sized.select(
-        "band_idx",
-        "band_val",
-        F.col("doc_id").alias("a_id"),
-        *[F.col(f"b{j}").alias(f"a_b{j}") for j in range(N_BANDS)],
-    )
-    b = sized.select(
-        "band_idx",
-        "band_val",
-        F.col("doc_id").alias("b_id"),
-        *[F.col(f"b{j}").alias(f"b_b{j}") for j in range(N_BANDS)],
-    )
-    # hint("merge"): identical-plan self-join — reuse the guard
-    # exchange instead of recomputing the decode/hash lineage under a
-    # broadcast build side (round 16 §3.1)
     cand = (
-        a.join(b.hint("merge"), ["band_idx", "band_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            *[F.col(f"a_b{j}") for j in range(N_BANDS)],
-            *[F.col(f"b_b{j}") for j in range(N_BANDS)],
-        )
+        bucket_self_join(unp, ["band_idx", "band_val"], "doc_id", max_bucket)
+        .drop("band_idx", "band_val")
         .distinct()
     )
     return (
-        cand.withColumn("hamming", hamming_expr("a_", "b_"))
+        cand.withColumn("hamming", hamming_expr("_a", "_b"))
         .filter(F.col("hamming") <= F.lit(int(max_dist)))
-        .select("a_id", "b_id", "hamming")
+        .select(
+            F.col("doc_id_a").alias("a_id"),
+            F.col("doc_id_b").alias("b_id"),
+            "hamming",
+        )
     )
 
 
@@ -346,27 +324,17 @@ def video_neardup_pairs(
     watermarked copy, or an embedded clip shares most frame hashes
     with its source even when container bytes differ completely).
 
-    Scale shape: ONE exchange on the 64-bit hash value; a hash
-    carried by more than `max_bucket` (video, frame) rows is a
-    degenerate frame (black/slate frames — the video analog of a stop
-    shingle) and is excised before the self-join, so the pair stage
-    is O(Σ bucket²) bounded exactly like the image band join. The
-    join carries (doc_id, hash) rows only — never frame bytes — and
-    n_shared counts DISTINCT shared hash values, so a still scene
-    repeated across many frames counts once."""
+    Scale shape: frame hashes pair through dedup.bucket_self_join on
+    the 64-bit hash value; a hash carried by more than `max_bucket`
+    (video, frame) rows is a degenerate frame (black/slate frames —
+    the video analog of a stop shingle). The join carries
+    (doc_id, hash) rows only — never frame bytes — and n_shared
+    counts DISTINCT shared hash values, so a still scene repeated
+    across many frames counts once."""
     hv = frame_hashes.select("doc_id", "phash")
-    sized = hv.withColumn(
-        "__sz", F.count("*").over(Window.partitionBy("phash"))
-    ).filter(F.col("__sz") <= F.lit(int(max_bucket)))
-    a = sized.select(F.col("doc_id").alias("a_id"), "phash")
-    b = sized.select(F.col("doc_id").alias("b_id"), "phash")
-    # hint("merge"): identical-plan self-join — reuse the guard
-    # exchange instead of recomputing the frame-hash lineage under a
-    # broadcast build side (round 16 §3.1)
     return (
-        a.join(b.hint("merge"), "phash")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
+        bucket_self_join(hv, ["phash"], "doc_id", max_bucket)
+        .groupBy(F.col("doc_id_a").alias("a_id"), F.col("doc_id_b").alias("b_id"))
         .agg(F.countDistinct("phash").cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= F.lit(int(min_shared)))
     )
@@ -389,7 +357,7 @@ def video_shot_boundaries(
     (video_frame_phash); the ONLY exchange is the doc_id partitioning
     for the per-video lag window, whose state is one previous row of
     4 SMALLINT-range band ints — never frame bytes. Distance is exact
-    integer popcount-of-XOR per band (hamming_expr's contract), so
+    integer popcount-of-XOR per band (as hamming_expr), so
     the oracle can restate it bit-for-bit."""
     ph = video_frame_phash(media)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")

@@ -14,13 +14,12 @@ engines (Spark `levenshtein`, DuckDB `levenshtein`), so the candidate
 set and every reported distance are bit-identical. Clustering is the
 shared integer min-label propagation (dedup.components_over_pairs).
 
-Scale shape: NEVER all-pairs. Candidates come from equality blocking
-(one hash exchange on the block key); oversized blocks are excluded
-by a MAX_BLOCK guard exactly like the LSH tier's MAX_BUCKET — a
-degenerate block key (e.g. a null-heavy column) cannot detonate into
-a quadratic join. Within-block pair enumeration is the same bounded
-self-join as triangle wedges. At 100 TB the block key is the shuffle
-key; everything else is per-block local.
+Scale shape: NEVER all-pairs. Candidates come from blocking through
+dedup.bucket_self_join (one hash exchange on the block key), whose
+ER_MAX_BLOCK guard excludes oversized blocks — a degenerate block key
+(e.g. a null-heavy column) cannot detonate into a quadratic join. At
+100 TB the block key is the shuffle key; everything else is
+per-block local.
 """
 
 from __future__ import annotations
@@ -28,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import components_over_pairs
+from .dedup import bucket_self_join, components_over_pairs, lsh_band_keys
+from .spread import spread_for_kernel
 
 # Match predicate: normalized-name Levenshtein <= ER_MAX_EDIT.
 ER_MAX_EDIT = 2
@@ -52,68 +52,57 @@ def blocking_pairs(
     the Levenshtein distance between their normalized (lower+trim)
     names is <= max_edit.
 
-    Plan (round-10 window form, same single-scan discipline as the
-    span path): the block-size guard is a partition-wide count(*)
-    window over ONE block-key exchange of the record relation —
-    the agg-then-join-back form re-planned the record lineage per
-    consumer (8 parquet scans in the executed plan vs 4, measured
-    1.03s -> 0.61s at sf0.1) — then the within-block self-join. The
-    distance runs JVM-side (built-in `levenshtein`, whole-stage
-    codegen) on block-local pairs only.
+    Plan: the records pair through dedup.bucket_self_join on the
+    block key (its 2..max_block guard drops singleton and over-cap
+    blocks); the distance runs JVM-side (built-in `levenshtein`,
+    whole-stage codegen) on block-local pairs only. Empty block_cols
+    is an error: one global block would make the candidate join
+    all-pairs — exactly what blocking exists to prevent.
 
     stats, when given, receives {"blocks_skipped": n} — the number of
     over-cap blocks excluded (disclosed truncation, never silent),
     computed by one extra bounded aggregate that only exists when the
     diagnostic is requested.
-
-    Size-1 blocks are excluded before the self-join (they cannot form
-    a pair — same guard as the sibling dedup/simsearch bucket joins).
-    Empty block_cols is an error: groupBy() would collapse to one
-    global block and the equality join would degenerate to a
-    cross-join shape — all-pairs is exactly what blocking exists to
-    prevent.
     """
-    if not block_cols:
-        raise ValueError(
-            "block_cols must be non-empty: blocking IS the scale "
-            "contract (an empty key would make the candidate join "
-            "all-pairs)"
-        )
-    from pyspark.sql import Window
-
-    cols = [F.col(c).alias(f"b{i}") for i, c in enumerate(block_cols)]
-    bkeys = [f"b{i}" for i in range(len(block_cols))]
-    r = records.select(
-        F.col(id_col).alias("rid"),
-        F.lower(F.trim(F.col(name_col))).alias("nm"),
-        *cols,
+    pairs = _blocked_name_pairs(
+        records, id_col, name_col, block_cols, max_edit, max_block
     )
     if stats is not None:
         stats["blocks_skipped"] = (
-            r.groupBy(*bkeys)
+            records.groupBy(*block_cols)
             .agg(F.count("*").alias("__bn"))
             .filter(F.col("__bn") > F.lit(int(max_block)))
             .count()
         )
-    w = Window.partitionBy(*bkeys)
-    kept = (
-        r.withColumn("__bn", F.count("*").over(w))
-        .filter(
-            (F.col("__bn") >= F.lit(2))
-            & (F.col("__bn") <= F.lit(int(max_block)))
-        )
-        .drop("__bn")
+    return pairs.select("id_a", "id_b", "dist")
+
+
+def _blocked_name_pairs(
+    records: DataFrame,
+    id_col: str,
+    name_col: str,
+    block_cols: list,
+    max_edit: int,
+    max_block: int,
+) -> DataFrame:
+    """(id_a, id_b, nm_a, nm_b, dist): same-block record pairs whose
+    normalized (lower+trim) names are within max_edit edits — the
+    candidate relation shared by blocking_pairs and match_scores."""
+    r = records.select(
+        F.col(id_col).alias("rid"),
+        F.lower(F.trim(F.col(name_col))).alias("nm"),
+        *[F.col(c).alias(f"b{i}") for i, c in enumerate(block_cols)],
     )
-    a, b = kept.alias("a"), kept.alias("b")
-    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in bkeys]
-    on.append(F.col("a.rid") < F.col("b.rid"))
-    dist = F.levenshtein(F.col("a.nm"), F.col("b.nm"))
+    bkeys = [f"b{i}" for i in range(len(block_cols))]
+    dist = F.levenshtein(F.col("nm_a"), F.col("nm_b"))
     return (
-        a.join(b, on)
+        bucket_self_join(r, bkeys, "rid", max_block)
         .filter(dist <= F.lit(int(max_edit)))
         .select(
-            F.col("a.rid").alias("id_a"),
-            F.col("b.rid").alias("id_b"),
+            F.col("rid_a").alias("id_a"),
+            F.col("rid_b").alias("id_b"),
+            "nm_a",
+            "nm_b",
             dist.cast("long").alias("dist"),
         )
     )
@@ -187,8 +176,6 @@ def survivorship(
         F.col(id_col).alias("entity_id"),
         F.col(name_col).alias("__nm"),
     ).join(clusters, "entity_id")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc(F.length("__nm")), F.asc("entity_id")
     )
@@ -286,39 +273,15 @@ def match_scores(
     keep the SHAPE (per-field agreement -> summed score -> threshold
     classes) while staying oracle-certifiable.
 
-    Scale shape: inherits blocking_pairs' bounds; scoring is
-    row-local arithmetic on the pair relation."""
-    cols = [F.col(c).alias(f"b{i}") for i, c in enumerate(block_cols)]
-    bkeys = [f"b{i}" for i in range(len(block_cols))]
-    from pyspark.sql import Window
-
-    r = records.select(
-        F.col(id_col).alias("rid"),
-        F.lower(F.trim(F.col(name_col))).alias("nm"),
-        *cols,
-    )
-    w = Window.partitionBy(*bkeys)
-    kept = (
-        r.withColumn("__bn", F.count("*").over(w))
-        .filter(
-            (F.col("__bn") >= F.lit(2))
-            & (F.col("__bn") <= F.lit(int(max_block)))
-        )
-        .drop("__bn")
-    )
-    a, b = kept.alias("a"), kept.alias("b")
-    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in bkeys]
-    on.append(F.col("a.rid") < F.col("b.rid"))
-    dist = F.levenshtein(F.col("a.nm"), F.col("b.nm"))
-    suffix_eq = F.substring(F.col("a.nm"), -1, 1) == F.substring(
-        F.col("b.nm"), -1, 1
+    Scale shape: the same blocked candidates as blocking_pairs;
+    scoring is row-local arithmetic on the pair relation."""
+    suffix_eq = F.substring(F.col("nm_a"), -1, 1) == F.substring(
+        F.col("nm_b"), -1, 1
     )
     score = (
         (F.lit(int(max_edit) + 1) - F.col("dist"))
         * F.lit(ER_SCORE_NAME_PER_EDIT)
-        + F.when(F.col("__sfx"), F.lit(ER_SCORE_SUFFIX_BONUS)).otherwise(
-            F.lit(0)
-        )
+        + F.when(suffix_eq, F.lit(ER_SCORE_SUFFIX_BONUS)).otherwise(F.lit(0))
     ).cast("long")
     decision = (
         F.when(F.col("score") >= F.lit(ER_THRESH_MATCH), F.lit("match"))
@@ -329,16 +292,10 @@ def match_scores(
         .otherwise(F.lit("non_match"))
     )
     return (
-        a.join(b, on)
-        .filter(dist <= F.lit(int(max_edit)))
-        .select(
-            F.col("a.rid").alias("id_a"),
-            F.col("b.rid").alias("id_b"),
-            dist.cast("long").alias("dist"),
-            suffix_eq.alias("__sfx"),
+        _blocked_name_pairs(
+            records, id_col, name_col, block_cols, max_edit, max_block
         )
-        .withColumn("score", score)
-        .drop("__sfx")
+        .select("id_a", "id_b", "dist", score.alias("score"))
         .withColumn("decision", decision)
     )
 
@@ -364,19 +321,16 @@ def blocking_pairs_lsh(
     serial-number-style names ("Customer#000000123") share nearly
     all grams corpus-wide, every band bucket degenerates, and the
     bucket guard would excise everything; such keys belong to the
-    equality/multipass strategies. The guard here is the standard
-    MAX bucket excision (disclosed truncation, the dedup.py LSH
-    contract) — size-1 buckets are skipped as everywhere else.
+    equality/multipass strategies. Buckets pair through
+    dedup.bucket_self_join, whose max_bucket excision is the disclosed
+    truncation of the dedup.py LSH contract.
 
-    Scale shape: one gram explode + one hash-agg for signatures
+    Scale shape: one gram explode + one hash-agg for the band keys
     (map-side combinable mins), band relation carries the normalized
-    name so the distance filter needs NO join back; one (band, key)
-    exchange; pair work bounded by sum(bucket^2) <=
-    n_buckets * max_bucket^2. The distance runs JVM-side
-    (whole-stage codegen levenshtein) on bucket-local pairs only."""
-    from .dedup import lsh_bands, minhash_signatures
-    from .spread import spread_for_kernel
-
+    name so the distance filter needs NO join back; pair work bounded
+    by sum(bucket^2) <= n_buckets * max_bucket^2. The distance runs
+    JVM-side (whole-stage codegen levenshtein) on bucket-local pairs
+    only."""
     # parallelism floor before the gram explode + k-hash aggregate
     # (operators/spread.py — no-op at cluster scale)
     r = spread_for_kernel(
@@ -400,33 +354,16 @@ def blocking_pairs_lsh(
             )
         ).alias("shingle"),
     )
-    sig = minhash_signatures(grams)
-    bands = lsh_bands(sig).join(r, "doc_id")
-    w = Window.partitionBy("band", "key")
-    sized = (
-        bands.withColumn("__bn", F.count("*").over(w))
-        .filter(
-            (F.col("__bn") >= 2)
-            & (F.col("__bn") <= F.lit(int(max_bucket)))
-        )
-        .drop("__bn")
-    )
-    a = sized.select(
-        "band", "key", F.col("doc_id").alias("id_a"),
-        F.col("nm").alias("nm_a"),
-    )
-    b = sized.select(
-        "band", "key", F.col("doc_id").alias("id_b"),
-        F.col("nm").alias("nm_b"),
-    )
+    bands = lsh_band_keys(grams).join(r, "doc_id")
     dist = F.levenshtein(F.col("nm_a"), F.col("nm_b"))
-    # hint("merge"): identical-plan self-join — reuse the guard
-    # exchange instead of recomputing the gram/minhash lineage under
-    # a broadcast build side (round 16 §3.1)
     return (
-        a.join(b.hint("merge"), ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "nm_a", "nm_b")
+        bucket_self_join(bands, ["band", "key"], "doc_id", max_bucket)
+        .select(
+            F.col("doc_id_a").alias("id_a"),
+            F.col("doc_id_b").alias("id_b"),
+            "nm_a",
+            "nm_b",
+        )
         .distinct()
         .filter(dist <= F.lit(int(max_edit)))
         .select("id_a", "id_b", dist.cast("long").alias("dist"))

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import bucket_self_join
 from .topk import topk_per_group
 
 DIM = 64
@@ -59,7 +60,9 @@ def dot(a: Column, b: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+    """NULL when either vector has zero norm — the Arrow scorer's NaN
+    also lands as NULL — instead of an ANSI division-by-zero error."""
+    return F.try_divide(dot(a, b), F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
 
 def _cos_arrow():
@@ -186,38 +189,21 @@ def cosine_neardup_pairs(
     The round-1 version self-joined on the ~10-value `label` column —
     Σ n_ℓ² pairs, quadratic per block and a scale-killer at 100 TB.
     Blocking on the 2^NUM_PLANES-bucket LSH key bounds each block at
-    max_bucket rows (degenerate buckets are dropped, the same
-    documented semantic as the MinHash guard, dedup.py
-    minhash_candidate_pairs), and near-identical vectors agree on all
-    sign bits, so true near-dups stay co-bucketed. The guard is a
-    window count over the bucket key — one exchange that the self-join
-    reuses (same ReusedExchange pattern as the MinHash path)."""
-    from pyspark.sql import Window
-
+    max_bucket rows through dedup.bucket_self_join (degenerate
+    buckets are dropped, the documented MinHash-guard semantic), and
+    near-identical vectors agree on all sign bits, so true near-dups
+    stay co-bucketed."""
     wb = emb.select(
         "vec_id", "embedding", hyperplane_bucket(F.col("embedding")).alias("bucket")
     )
-    w = Window.partitionBy("bucket")
-    guarded = (
-        wb.withColumn("sz", F.count("*").over(w))
-        .filter((F.col("sz") >= 2) & (F.col("sz") <= max_bucket))
-        .drop("sz")
-    )
-    a = guarded.select(
-        "bucket", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
-    )
-    b = guarded.select(
-        "bucket", F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
-    )
     return (
-        a.join(b, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
+        bucket_self_join(wb, ["bucket"], "vec_id", max_bucket)
         .select(
-            "vec_a",
-            "vec_b",
-            _score_cos(F.col("emb_a"), F.col("emb_b"), use_arrow).alias(
-                "cos"
-            ),
+            F.col("vec_id_a").alias("vec_a"),
+            F.col("vec_id_b").alias("vec_b"),
+            _score_cos(
+                F.col("embedding_a"), F.col("embedding_b"), use_arrow
+            ).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -1743,6 +1729,9 @@ def centroid_drift(emb: DataFrame, side_col: Column | None = None) -> DataFrame:
 
 MMR_LAMBDA = 0.7
 MMR_SHORTLIST = 16
+# Ceiling on the pairwise-sim rows mmr_topk collects to the driver
+# (n_queries * shortlist**2 bounds them).
+MMR_MAX_DRIVER_PAIRS = 1_000_000
 
 
 def mmr_topk(
@@ -1775,7 +1764,16 @@ def mmr_topk(
     Scores are bit-identical: the driver applies the SAME IEEE-double
     expression λ·cos − (1−λ)·maxsim to the Spark-computed cos/sim
     values, with (1−λ) evaluated in Python exactly as the previous
-    F.lit(1.0 - lam) literal was."""
+    F.lit(1.0 - lam) literal was. A candidate whose cos is NULL (a
+    zero-norm embedding) is skipped, as is a pair whose sim is NULL.
+    n_queries * shortlist**2 over MMR_MAX_DRIVER_PAIRS raises before
+    any work: the greedy step would no longer be constant-size."""
+    if n_queries * shortlist**2 > MMR_MAX_DRIVER_PAIRS:
+        raise ValueError(
+            f"mmr_topk: n_queries * shortlist**2 = "
+            f"{n_queries * shortlist**2} exceeds the driver-side "
+            f"ceiling MMR_MAX_DRIVER_PAIRS = {MMR_MAX_DRIVER_PAIRS}"
+        )
     sl = cosine_topk(emb, n_queries=n_queries, k=shortlist).select(
         "query_id", "vec_id", "cos"
     ).localCheckpoint()
@@ -1821,7 +1819,7 @@ def mmr_topk(
         for step in range(1, int(k) + 1):
             best = None
             for vid, cos in cands:
-                if vid in picked:
+                if vid in picked or cos is None:
                     continue
                 if step == 1:
                     score = lam * cos

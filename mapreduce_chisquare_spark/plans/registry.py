@@ -5,35 +5,22 @@ Split by domain:
 - registry_relational: join/agg/window/set-op proof over TPC-H-ish tables.
 - registry_extensions: LLM-data-pipeline ops (dedup, simsearch, text
   analysis, windows, multimodal).
+- registry_analytics: graph, time-series and analytics operators.
 """
 
 from __future__ import annotations
 
+from .registry_analytics import ANALYTICS_QUERIES
+from .registry_extensions import EXTENSION_QUERIES
+from .registry_relational import RELATIONAL_QUERIES
 from .registry_text import TEXT_QUERIES
 
-REGISTRY: dict = {}
-REGISTRY.update(TEXT_QUERIES)
-
-try:  # widened incrementally; keep entry importable while building
-    from .registry_relational import RELATIONAL_QUERIES
-
-    REGISTRY.update(RELATIONAL_QUERIES)
-except ImportError:
-    pass
-
-try:
-    from .registry_extensions import EXTENSION_QUERIES
-
-    REGISTRY.update(EXTENSION_QUERIES)
-except ImportError:
-    pass
-
-try:
-    from .registry_analytics import ANALYTICS_QUERIES
-
-    REGISTRY.update(ANALYTICS_QUERIES)
-except ImportError:
-    pass
+REGISTRY: dict = {
+    **TEXT_QUERIES,
+    **RELATIONAL_QUERIES,
+    **EXTENSION_QUERIES,
+    **ANALYTICS_QUERIES,
+}
 
 # Certification-window rotation: the driver's per-round correctness
 # sweep certifies the FIRST 50 entries of this dict in order, so each

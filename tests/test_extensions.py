@@ -73,6 +73,21 @@ def test_neardup_components_planted(spark):
     assert comp[3] == 3 and comp[4] == 3
 
 
+def test_components_over_pairs_nonconvergence_raises(spark):
+    # A 6-node path has diameter 5: two rounds of min-label
+    # propagation leave labels still changing, which must fail loud
+    # rather than return partly propagated component ids.
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(6 - 1)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dd.components_over_pairs(pairs, max_iter=2)
+    stats: dict = {}
+    comp = dd.components_over_pairs(pairs, max_iter=20, stats=stats)
+    assert stats == {"rounds": 6, "converged": True}
+    assert {r.component_id for r in comp.collect()} == {0}
+
+
 def test_jaccard_exact_values(planted_docs):
     pairs = dd.minhash_candidate_pairs(planted_docs)
     j = {

@@ -93,20 +93,40 @@ def test_minhash_reuses_bucket_stage_at_runtime(spark, sf_dir):
     assert "ReusedExchange" in executed or "ReusedQueryStage" in executed
 
 
-def test_band_self_join_is_sort_merge_single_scan(spark, sf_dir):
-    # Round 16: the guarded band self-join is hint("merge")-pinned to
-    # SortMergeJoin so its two identical-plan sides dedupe to ONE
-    # exchange at runtime. Left to the planner, the small build side
-    # auto-broadcasts and the broadcast subtree RECOMPUTES the whole
-    # shingle->signature lineage (a BroadcastExchange cannot reuse a
-    # shuffle exchange): the executed plan then scans the corpus
-    # twice. Assert the pinned strategy and the single corpus scan.
-    df = REGISTRY["dedup_minhash_lsh_k128"][0](spark, sf_dir)
+# One registry query per bucket_self_join caller, with the most parquet
+# scans its executed plan may carry (the counts before the callers
+# shared the primitive; the two-scan fixtures union a base arm and a
+# clone arm of one table).
+_BUCKET_SELF_JOIN_SCANS = {
+    "dedup_minhash_lsh_k128": 1,
+    "winnowing_pairs": 1,
+    "dedup_simhash_pairs": 1,
+    "image_neardup_pairs": 2,
+    "video_neardup": 2,
+    "er_blocking_lsh": 2,
+    "er_blocking_pairs": 2,
+    "er_match_scores": 2,
+    "embed_neardup": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BUCKET_SELF_JOIN_SCANS))
+def test_band_self_join_is_sort_merge_single_scan(spark, sf_dir, name):
+    # bucket_self_join pins its self-join to SortMergeJoin so the two
+    # identical-plan sides dedupe to ONE exchange at runtime. Left to
+    # the planner, the small build side auto-broadcasts and the
+    # broadcast subtree RECOMPUTES the whole upstream lineage (a
+    # BroadcastExchange cannot reuse a shuffle exchange): the executed
+    # plan then scans the corpus once more. Assert the pinned strategy
+    # and no extra corpus scan.
+    df = REGISTRY[name][0](spark, sf_dir)
     df.collect()
     executed = df._jdf.queryExecution().executedPlan().toString()
     executed = executed.split("== Initial Plan ==")[0]
-    assert "SortMergeJoin" in executed
-    assert executed.count("Scan parquet") == 1, executed
+    assert "SortMergeJoin" in executed, executed
+    assert (
+        executed.count("Scan parquet") <= _BUCKET_SELF_JOIN_SCANS[name]
+    ), executed
 
 
 def test_ivf_probe_filter_reaches_scan(spark, sf_dir):

@@ -106,6 +106,29 @@ def test_certification_window_leads_registry_order():
     assert not missing, f"window names absent from registry: {missing}"
 
 
+def test_registry_holds_every_domain_module():
+    """Every domain registry's keys reach the merged REGISTRY: a module
+    that fails to import must fail the run, not silently shrink the
+    oracle sweep."""
+    from mapreduce_chisquare_spark.plans.registry import REGISTRY
+    from mapreduce_chisquare_spark.plans.registry_analytics import (
+        ANALYTICS_QUERIES,
+    )
+    from mapreduce_chisquare_spark.plans.registry_extensions import (
+        EXTENSION_QUERIES,
+    )
+    from mapreduce_chisquare_spark.plans.registry_relational import (
+        RELATIONAL_QUERIES,
+    )
+    from mapreduce_chisquare_spark.plans.registry_text import TEXT_QUERIES
+
+    for part in (
+        TEXT_QUERIES, RELATIONAL_QUERIES, EXTENSION_QUERIES, ANALYTICS_QUERIES
+    ):
+        assert part, "empty domain registry"
+        assert set(part) <= set(REGISTRY), sorted(set(part) - set(REGISTRY))
+
+
 @pytest.mark.slow  # 10s+ reference/brute-force sweep; full tier
 def test_oracle_sql_never_widens_to_hugeint(duck):
     """DuckDB widens sum(BIGINT) — including windowed sums — to

@@ -202,6 +202,37 @@ def test_mmr_model_parity(spark):
         assert abs(a - b) < 1e-12
 
 
+def test_mmr_skips_zero_norm_candidate(spark):
+    """A zero-norm embedding has a NULL cosine: MMR must skip it
+    instead of raising on lam * None, and still fill k from the rest."""
+    from mapreduce_chisquare_spark.operators.simsearch import mmr_topk
+
+    rows = _toy_emb(spark).collect()
+    emb = spark.createDataFrame(
+        [(r.vec_id, r.embedding, r.label) for r in rows]
+        + [(8, [0.0, 0.0, 0.0, 0.0], "z")],
+        "vec_id long, embedding array<float>, label string",
+    )
+    got = mmr_topk(emb, n_queries=1, shortlist=8, k=3).collect()
+    assert [r.step for r in got] == [1, 2, 3]
+    assert 8 not in {r.vec_id for r in got}
+    assert all(r.cos is not None for r in got)
+
+
+def test_mmr_driver_ceiling_raises(spark):
+    from mapreduce_chisquare_spark.operators.simsearch import (
+        MMR_MAX_DRIVER_PAIRS,
+        mmr_topk,
+    )
+
+    with pytest.raises(ValueError, match="MMR_MAX_DRIVER_PAIRS"):
+        mmr_topk(
+            _toy_emb(spark),
+            n_queries=MMR_MAX_DRIVER_PAIRS // 16 + 1,
+            shortlist=4,
+        )
+
+
 def test_centroid_drift_identical_slices(spark):
     """Slices with IDENTICAL vectors must read cos = 1, drift = 0
     exactly (integer sums make the two centroids equal)."""
